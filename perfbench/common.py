@@ -32,7 +32,8 @@ _THREAD_ENV = (
 
 
 # Driver heap, pinned below physical memory; -Xms equals it so the heap
-# does not resize with run timing (peak RSS then repeats to ~2%).
+# does not resize with run timing (peak RSS then repeats to ~2%, but is
+# bounded below by the heap, see ``old_gen_peak_mb``).
 HEAP = "2g"
 
 
@@ -222,6 +223,26 @@ def jvm_gc_seconds(spark) -> float:
     """Total collection time of every JVM garbage collector so far."""
     beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
     return sum(max(0, beans.get(i).getCollectionTime()) for i in range(beans.size())) / 1000.0
+
+
+def _old_gen_pools(spark):
+    beans = spark._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    for i in range(beans.size()):
+        pool = beans.get(i)
+        if "Old" in pool.getName() or "Tenured" in pool.getName():
+            yield pool
+
+
+def reset_old_gen_peak(spark) -> None:
+    for pool in _old_gen_pools(spark):
+        pool.resetPeakUsage()
+
+
+def old_gen_peak_mb(spark) -> float:
+    """Peak occupancy of the JVM's old generation since the last reset, in
+    MiB: the data that outlived young collections. With ``-Xms`` pinned,
+    VmHWM mostly reads the heap setting; this moves with the program."""
+    return sum(p.getPeakUsage().getUsed() for p in _old_gen_pools(spark)) / (1024.0 * 1024.0)
 
 
 def median(xs: list[float]) -> float:

@@ -23,10 +23,11 @@ log), removes it at exit, and stops the JVM it started.
 
 import time
 
-_T0 = time.perf_counter()  # process start, for the first set-up
+_T0 = time.perf_counter()  # process start: setup_s counts from here
 
 import argparse  # noqa: E402
 import json  # noqa: E402
+import math  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
 import sys  # noqa: E402
@@ -39,17 +40,16 @@ from wl_curation import LlmCuration  # noqa: E402
 from wl_etl import EtlRoundtrip  # noqa: E402
 from wl_lakehouse import LakehouseMaintenance  # noqa: E402
 
-SETUPS = 3  # set-ups per timed run; setup_s is their median
 WARM_S = 6.0  # full-size warm-up, in seconds at the workload's nominal speed
 
 
 def iterations_for(wl, seconds: float) -> int:
-    """Iterations that take ``seconds`` at the workload's nominal speed
-    (``ITER_S``). A count, not a deadline: the JVM keeps getting faster for
-    tens of seconds after warm-up (ETL iterations fell from 1.73 s to
-    1.42 s over the first 25 s), so every run measures the same work at the
-    same point of that curve, whatever the host's speed."""
-    return max(1, round(seconds / wl.ITER_S))
+    """Iterations that take at least ``seconds`` at the workload's nominal
+    speed (``ITER_S``). A count, not a deadline: the JVM keeps getting
+    faster for tens of seconds after warm-up (ETL iterations fell from
+    1.73 s to 1.42 s over the first 25 s), so every run measures the same
+    work at the same point of that curve, whatever the host's speed."""
+    return max(1, math.ceil(seconds / wl.ITER_S))
 
 
 WORKLOADS = {w.name: w for w in (EtlRoundtrip, LakehouseMaintenance, LlmCuration)}
@@ -78,8 +78,7 @@ class Runner:
 
     def new_workload(self, name: str, idx: int):
         wl = WORKLOADS[name](
-            self.spark, os.path.join(self.tmp, f"{name}_{idx}"), self.args.seed,
-            self.args.tiny, setup_idx=idx)
+            self.spark, os.path.join(self.tmp, f"{name}_{idx}"), self.args.seed, self.args.tiny)
         wl.setup()
         return wl
 
@@ -87,45 +86,41 @@ class Runner:
     def run(self, wl, n: int, spans=None) -> list[dict]:
         return [common.run_iteration(wl.ops(), self.tally, spans) for _ in range(n)]
 
-    def warm(self, wl, full: bool = True) -> list[float]:
+    def warm(self, wl) -> list[float]:
         """Untimed warm-up. The first iteration runs on tiny inputs: it pays
         the one-time costs (class loading, Python worker start, code
         generation), which hardly depend on input size, at a fraction of a
         full iteration's price. Then ``WARM_S`` worth of full-size
         iterations, counted at the workload's nominal speed."""
         t0 = time.perf_counter()
-        cold = WORKLOADS[wl.name](
-            self.spark, wl.dir + "_cold", self.args.seed, True, setup_idx=99)
+        cold = WORKLOADS[wl.name](self.spark, wl.dir + "_cold", self.args.seed, True)
         cold.setup()
         common.run_iteration(cold.ops(), self.tally)
-        times = [time.perf_counter() - t0]
-        if full:
-            times += [r["wall_s"] for r in self.run(wl, iterations_for(wl, WARM_S))]
-        return times
+        return [time.perf_counter() - t0] + [
+            r["wall_s"] for r in self.run(wl, iterations_for(wl, WARM_S))]
 
     # ---- --trace 0 -----------------------------------------------------
     def timed_run(self) -> dict:
+        """One cold set-up, the warm-up, then the timed iterations.
+        ``setup_s`` runs from process start until the session is up and the
+        inputs are generated and staged: imports, JVM launch, ``get_spark``
+        and staging. It is taken once, because a second set-up in the same
+        process would reuse the running JVM and leave the launch out."""
         args = self.args
-        setups, wl, prev_dir = [], None, None
-        for i in range(SETUPS):
-            t0 = _T0 if i == 0 else time.perf_counter()
-            self.restart()
-            wl = self.new_workload(args.workload, i)
-            setups.append(time.perf_counter() - t0)
-            if prev_dir:
-                shutil.rmtree(prev_dir, ignore_errors=True)
-            prev_dir = wl.dir
+        self.restart()
+        wl = self.new_workload(args.workload, 0)
+        setup_s = time.perf_counter() - _T0
         warm = self.warm(wl)
         probe = common.host_probe()
         runs = self.run(wl, iterations_for(wl, args.seconds))
         probe += common.host_probe()
         med = {k: common.median([r[k] for r in runs]) for k in ("wall_s", "phase1_s", "phase2_s")}
         _diag({
-            "workload": args.workload, "setups_s": setups, "warmup_s": warm,
+            "workload": args.workload, "setup_s": setup_s, "warmup_s": warm,
             "iterations_s": [r["wall_s"] for r in runs], "host_probe_s": probe,
         })
         return {
-            "setup_s": (common.median(setups), "s"),
+            "setup_s": (setup_s, "s"),
             "wall_s": (med["wall_s"], "s"),
             "phase1_s": (med["phase1_s"], "s"),
             "phase2_s": (med["phase2_s"], "s"),
@@ -135,9 +130,9 @@ class Runner:
     # ---- --trace 1 -----------------------------------------------------
     def traced_run(self) -> dict:
         """The named workload untraced, then every workload in a session
-        with the event log on: the named one first, warmed and timed the
-        same way, so the two walls compare; the others get one timed
-        iteration after the tiny cold one, enough to emit their spans."""
+        with the event log on: the named one first, timed the same way, so
+        the two walls compare; the others get one iteration, enough to emit
+        their spans. Every workload is fully warmed first."""
         args = self.args
         t0 = time.perf_counter()
         self.restart()
@@ -156,12 +151,15 @@ class Runner:
         for name in order:
             wl = self.new_workload(name, 1)
             named = name == args.workload
-            self.warm(wl, full=named)
+            self.warm(wl)
+            if named:
+                common.reset_old_gen_peak(self.spark)
             gc0 = common.jvm_gc_seconds(self.spark)
             runs = self.run(wl, iterations_for(wl, args.seconds / 2) if named else 1, spans)
             gc_s += common.jvm_gc_seconds(self.spark) - gc0
             if named:
                 traced = common.median([r["wall_s"] for r in runs])
+                old_gen_mb = common.old_gen_peak_mb(self.spark)
             if name == "etl_roundtrip":
                 csv_bytes = wl.plain_bytes
             elif name == "lakehouse_maintenance":
@@ -186,6 +184,7 @@ class Runner:
         for k, v in extra.items():
             out[k] = (v, "ratio")
         out["jvm.gc_s"] = (gc_s, "s")
+        out["jvm.old_gen_peak_mb"] = (old_gen_mb, "MB")
         out["host.probe_s"] = (common.median(probe), "s")
         out["trace.overhead_s"] = (traced - untraced, "s")
         _diag({"workload": args.workload, "untraced_wall_s": untraced, "traced_wall_s": traced,

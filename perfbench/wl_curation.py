@@ -36,7 +36,7 @@ class LlmCuration:
     name = "llm_curation"
     ITER_S = 4.0  # nominal seconds per iteration (4 cores)
 
-    def __init__(self, spark, workdir: str, seed: int, tiny: bool, setup_idx: int = 0):
+    def __init__(self, spark, workdir: str, seed: int, tiny: bool):
         self.spark = spark
         self.dir = workdir
         self.seed = seed

@@ -34,12 +34,14 @@ class EtlRoundtrip:
     name = "etl_roundtrip"
     ITER_S = 1.7  # nominal seconds per iteration (4 cores)
 
-    def __init__(self, spark, workdir: str, seed: int, tiny: bool, setup_idx: int = 0):
+    def __init__(self, spark, workdir: str, seed: int, tiny: bool):
         self.spark = spark
         self.dir = workdir
         self.seed = seed
         self.n = 400 if tiny else 20_000
-        self.url = f"jdbc:derby:memory:perfbench_etl_{setup_idx};create=true"
+        # in-memory Derby, one database per workload directory: the JVM
+        # outlives a session restart, and so would a shared database
+        self.url = f"jdbc:derby:memory:{os.path.basename(workdir)};create=true"
 
     # ---- inputs and model -------------------------------------------------
     def setup(self) -> None:
